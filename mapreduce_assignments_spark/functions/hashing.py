@@ -50,18 +50,9 @@ def minhash_value(base_hash: Column, i: int) -> Column:
     return (F.lit(MINHASH_A[i]) * base_hash + F.lit(MINHASH_B[i])) % F.lit(MINHASH_PRIME)
 
 
-def h28_sql(expr: str) -> str:
-    """DuckDB SQL text equivalent of :func:`h28`."""
-    return f"CAST(CONCAT('0x', substring(md5({expr}), 1, 7)) AS BIGINT)"
-
-
 def h60_sql(expr: str) -> str:
     """DuckDB SQL text equivalent of :func:`h60`."""
     return f"CAST(CONCAT('0x', substring(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def minhash_value_sql(base_expr: str, i: int) -> str:
-    return f"(({MINHASH_A[i]} * {base_expr} + {MINHASH_B[i]}) % {MINHASH_PRIME})"
 
 
 def h28_spark_sql(expr: str) -> str:

@@ -1065,8 +1065,10 @@ def record_linkage_pairs(
     # is CPU-dense narrow work inheriting this frame's partitioning —
     # a one-row-group input would run it all on ONE task (measured:
     # the sf0.1 candidate join 10.5 -> 2.6 s from this alone). The
-    # guard repartitions only under-split inputs; real multi-split
-    # corpora pass through with no exchange (guide §2.5).
+    # guard covers scan-inherited layouts only: it repartitions an
+    # under-split scan, passes real multi-split corpora through with
+    # no exchange (guide §2.5), and leaves a frame that already
+    # carries an exchange to AQE's partitioning.
     keyed = ensure_min_parallelism(
         df.select(
             F.col(id_col).alias("rid"),

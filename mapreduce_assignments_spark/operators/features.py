@@ -577,7 +577,9 @@ def span_corruption_stats(
     masked token follows an unmasked one. Narrow also means the scan's
     partitioning is inherited verbatim, so a few-file input would run
     the whole pass on a few tasks — ``ensure_min_parallelism`` splits
-    that case (and only that case) up front.
+    that case (and only that case) up front. The guard covers
+    scan-inherited layouts only: an input that already carries an
+    exchange keeps the partitioning AQE gives it.
     """
     from ..sources.tables import ensure_min_parallelism
 

@@ -75,7 +75,11 @@ class _loop_tuning:
     """Context manager for the iteration loop; restores both settings
     on exit. Session-level conf — safe for the sequential driver/bench
     pattern, but mutates the shared session for the loop's duration
-    (documented in the public docstrings).
+    (documented in the public docstrings). It is the engine's one
+    set-and-restore window on a caller's session (see
+    tests/test_conf_write_lint.py): Spark has no per-query AQE switch,
+    and an A/B of the pagerank family at sf0.1 on 4 cores ran 44-48 s
+    without the window against 30-41 s with it.
 
     (a) AQE off below _AQE_MIN_NODES: per-stage re-planning costs
         20-40% on micro-stages (measured) with nothing to re-plan.

@@ -260,7 +260,7 @@ def corpus_card(
     source count (tens), so the output is driver-safe by construction.
     """
     from .text import tokens_array
-    from .text_quality import quality_expr
+    from .text_quality import rounded_quality
 
     return (
         docs.groupBy(F.col(source_col).alias("source"))
@@ -275,7 +275,7 @@ def corpus_card(
             ).alias("uniq_ratio"),
             # per-doc pre-round before the mean: the same float
             # discipline (and the same value) as source_stats' oracle
-            F.round(F.avg(F.round(quality_expr(text_col), 6)), 6).alias(
+            F.round(F.avg(rounded_quality(text_col)), 6).alias(
                 "avg_quality"
             ),
             F.round(

@@ -56,15 +56,10 @@ __all__ = [
 # than reducing scale): measure columns get (18,6), unit factors like
 # (1 - discount) get (8,6) → products peak at (38,18).
 _DEC = "decimal(18,6)"
-_FAC = "decimal(8,6)"
 
 
 def _dec(col: str):
     return F.col(col).cast(_DEC)
-
-
-def _fac(col: str):
-    return F.col(col).cast(_FAC)
 
 
 def _exact_product_dec(*cols_and_factors) -> "F.Column":

@@ -1004,7 +1004,9 @@ def random_projection(
     map is narrow it also inherits the scan's partitioning, so a
     few-file input would serialize the whole operator —
     ``ensure_min_parallelism`` splits that case (and ONLY that case)
-    up front.
+    up front. The guard covers scan-inherited layouts only: an input
+    that already carries an exchange keeps the partitioning AQE gives
+    it.
     """
     from ..sources.tables import ensure_min_parallelism
 

@@ -20,6 +20,7 @@ __all__ = [
     "bigram_logprob",
     "quality_score",
     "quality_expr",
+    "rounded_quality",
     "source_stats",
     "top_terms_per_source",
     "lang_source_matrix",
@@ -200,6 +201,16 @@ def quality_expr(text_col: str = "text") -> Column:
     )
 
 
+def rounded_quality(text_col: str = "text") -> Column:
+    """:func:`quality_expr` at 6 decimals, rounded the way the DuckDB
+    oracle rounds: scale by 1e6, round half away from zero, unscale.
+    Spark's ``round(x, 6)`` rounds the decimal rendering of ``x``
+    instead, so a raw score whose scaled double lands just below a
+    half step (0.5046875 * 1e6 == 504687.49999999994) came out 1e-6
+    higher than the oracle's (0.504688 vs 0.504687)."""
+    return F.round(quality_expr(text_col) * 1e6) / 1e6
+
+
 def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Composite document quality in [0,1]:
     0.4·length_score + 0.3·lexical_diversity + 0.3·stopword_signal.
@@ -209,7 +220,7 @@ def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id
     """
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.round(quality_expr(text_col), 6).alias("quality"),
+        rounded_quality(text_col).alias("quality"),
     )
 
 
@@ -240,7 +251,7 @@ def source_stats(
         F.col(source_col).alias("source"),
         F.col(lang_col).alias("lang"),
         F.size(tokens_array(text_col)).alias("__t"),
-        F.round(quality_expr(text_col), 6).alias("__q"),
+        rounded_quality(text_col).alias("__q"),
     )
     return per_doc.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -1035,7 +1046,7 @@ def nb_quality_confusion(
     toks = tokens_array(text_col)
     labeled = docs.select(
         F.col(id_col).alias("doc_id"),
-        (F.round(quality_expr(text_col), 6) >= F.lit(tau)).cast("int").alias("label"),
+        (rounded_quality(text_col) >= F.lit(tau)).cast("int").alias("label"),
         toks.alias("ts"),
     )
     train = labeled.where(F.pmod("doc_id", F.lit(holdout_mod)) != 0)

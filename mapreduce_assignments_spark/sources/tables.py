@@ -7,6 +7,9 @@ lineitem events documents embeddings — one parquet file each under
 At 100 TB each of these would be a partitioned parquet dataset; the
 loader is path-based so nothing changes except the path (and Spark's
 vectorized parquet reader + partition pruning take over).
+
+Entry contract: ``load_table`` pins the caller's session to UTC and
+NANOS-as-long parquet reads (see its docstring).
 """
 
 from __future__ import annotations
@@ -53,6 +56,17 @@ _LOADED: dict[tuple[int, str, str], DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one driver table as a lazy DataFrame (memoized per session).
+
+    Entry contract: loading a table with timestamp columns (orders,
+    lineitem, events) pins ``spark.sql.session.timeZone=UTC`` and
+    ``spark.sql.legacy.parquet.nanosAsLong=true`` on the caller's
+    session — every engine timestamp is a UTC instant, so
+    ``hour()``/``date_format()`` agree with the tz-naive DuckDB
+    oracles. The pin writes the same fixed values every time and never
+    restores the old ones, so no set-and-restore window opens for a
+    concurrent query on the same session to observe.
+    """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     key = (id(spark._jsparkSession), sf_dir, name)
@@ -65,15 +79,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Both confs are runtime-settable SQL confs; callers' sessions
-    # (the correctness harness builds its own vanilla SparkSession)
-    # won't have them. Without nanosAsLong the vectorized reader
-    # rejects TIMESTAMP(NANOS) columns outright [PARQUET_TYPE_ILLEGAL].
-    # The UTC pin makes hour()/month()/date_format() over these
-    # timestamps — and the NTZ→instant cast below — agree with the
-    # tz-naive DuckDB oracles regardless of the host session's default
-    # timezone: the engine's documented contract is "all timestamps
-    # are UTC instants".
+    # The entry-contract pin (see load_table). Both confs are
+    # runtime-settable SQL confs that callers' sessions (the
+    # correctness harness builds its own vanilla SparkSession) won't
+    # have: without nanosAsLong the vectorized reader rejects
+    # TIMESTAMP(NANOS) columns outright [PARQUET_TYPE_ILLEGAL], and the
+    # UTC pin makes the NTZ→instant cast below value-preserving.
     if name in _TS_COLS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -95,36 +106,34 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     return df
 
 
-def ensure_min_parallelism(df: DataFrame, factor: float = 0.5) -> DataFrame:
+def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     """Guard a ZERO-SHUFFLE (narrow-map) pipeline against a
-    low-partition input layout: a narrow map inherits the scan's
+    low-partition SCAN layout: a narrow map inherits the scan's
     partitioning, so a one-file table runs the whole operator on one
     task no matter how many cores exist (measured: random_projection
     8.6x wall for 10x data at sf1 purely because the upscaled table
-    was one file — SCALE.md). Repartition round-robin to
-    ``factor * defaultParallelism`` ONLY when the input is below it;
-    already-split inputs (every real 100 TB dataset) pass through with
-    no exchange. Row values are untouched, so set-semantics outputs
-    (and their oracles) are unaffected.
+    was one file — SCALE.md). A frame with fewer than
+    ``max(2, defaultParallelism // 2)`` partitions is repartitioned
+    round-robin to ``defaultParallelism``; already-split inputs (every
+    real 100 TB dataset) pass through with no exchange. Row values are
+    untouched, so set-semantics outputs (and their oracles) are
+    unaffected.
+
+    Contract: the guard covers scan-inherited layouts only. A frame
+    whose physical plan is an ``AdaptiveSparkPlan`` already contains an
+    exchange; its partition count is decided by AQE at execution, and
+    finalizing that plan here would run its shuffle stages as a job, so
+    it passes through unprobed. Any other frame is probed JVM-side
+    through ``queryExecution().toRdd()`` — physical planning only, no
+    job, no conf write, no Python-RDD conversion. ``toRdd`` is a lazy
+    val of the Dataset, and ``load_table`` returns one Dataset per
+    table, so repeated guards over a loaded table plan it once.
     """
-    spark = df.sparkSession
-    sc = spark.sparkContext
-    target = max(1, int(sc.defaultParallelism * factor))
-    # JVM-side partition count (the Python ``df.rdd`` property would
-    # additionally build a javaToPython conversion stage) — probed
-    # with AQE disabled: finalizing an AdaptiveSparkPlan MATERIALIZES
-    # its shuffle stages, so probing a frame that already contains an
-    # exchange (e.g. one routed through ``_parallelize``) ran a real
-    # job per query construction (measured: 1 job / 0.25 s AQE-on vs
-    # 0 jobs / 1 ms AQE-off, same count — the guard only needs the
-    # STATIC layout; AQE re-planning still applies at execution).
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        n_parts = df._jdf.rdd().getNumPartitions()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    if n_parts < target:
+    qe = df._jdf.queryExecution()
+    if qe.executedPlan().nodeName() == "AdaptiveSparkPlan":
+        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if qe.toRdd().getNumPartitions() < max(2, target // 2):
         return df.repartition(target)
     return df
 

@@ -14,6 +14,8 @@ Sources of truth:
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -30,6 +32,21 @@ from mapreduce_assignments_spark.sources.text_corpus import (
 
 BIBLE_SHAKES = "/root/reference/assignment2/bible+shakes.nopunc.gz"
 SAMPLE_LARGE = "/root/reference/assignment4/sample-large.txt"
+PMI_JOB1_OUT = "/root/reference/assignment2/bin/wc/part-r-00000"
+
+
+def _reference_input(path: str) -> str:
+    """Return ``path``, or FAIL (never skip) naming the missing input:
+    these goldens are only evidence when they run, and a missing
+    reference checkout must stay visible as a red test."""
+    if not os.path.exists(path):
+        pytest.fail(
+            f"missing reference input {path}: the golden tests read the "
+            "reference repository's own data, which is not present here "
+            "— see ROADMAP.md 'Known red' (restore the data; do not skip)",
+            pytrace=False,
+        )
+    return path
 
 # assignment4/assignment4.md:7-17 and :21-31, verbatim.
 GOLDEN_PPR = {
@@ -50,7 +67,7 @@ GOLDEN_PPR = {
 
 @pytest.fixture(scope="module")
 def corpus(spark):
-    return read_text_corpus(spark, BIBLE_SHAKES).cache()
+    return read_text_corpus(spark, _reference_input(BIBLE_SHAKES)).cache()
 
 
 def test_word_count_goldens(corpus):
@@ -81,7 +98,7 @@ def test_pairs_pmi_job1_golden_file(corpus):
     reproduced exactly by the engine's primitives."""
     golden_pairs: dict[tuple[str, str], int] = {}
     golden_marg: dict[str, int] = {}
-    with open("/root/reference/assignment2/bin/wc/part-r-00000") as fh:
+    with open(_reference_input(PMI_JOB1_OUT)) as fh:
         for line in fh:
             key, val = line.rstrip("\n").split("\t")
             w1, w2 = key[1:-1].split(", ", 1)
@@ -166,7 +183,7 @@ def test_pmi_goldens(corpus):
 
 
 def test_personalized_pagerank_golden_top10(spark):
-    g = read_adjacency_text(spark, SAMPLE_LARGE)
+    g = read_adjacency_text(spark, _reference_input(SAMPLE_LARGE))
     assert g.count() == 1458
     ranks = personalized_pagerank(
         g, sources=list(GOLDEN_PPR), n_iter=20
@@ -227,7 +244,7 @@ def test_boolean_retrieval_and_postings_goldens(spark):
     )
     from mapreduce_assignments_spark.plans.rpn import BooleanQueryPlanner
 
-    corpus = read_text_corpus(spark, BIBLE_SHAKES, doc_id="offset")
+    corpus = read_text_corpus(spark, _reference_input(BIBLE_SHAKES), doc_id="offset")
     tfs = term_frequencies(corpus).cache()
 
     star = tfs.where(F.col("term") == "starcross'd").collect()

@@ -650,22 +650,31 @@ def test_semantic_decontamination_best_match_and_threshold(spark):
 
 def test_ensure_min_parallelism_guard(spark):
     """The narrow-map parallelism guard (round-7 VERDICT item 4):
-    a one-partition input is split to ~cores/2 partitions; an
-    already-parallel input passes through without a repartition, and
-    values are untouched either way."""
+    a one-partition input is split to defaultParallelism partitions;
+    an already-parallel input passes through without a repartition,
+    and values are untouched either way."""
     from mapreduce_assignments_spark.sources.tables import (
         ensure_min_parallelism,
     )
 
-    target = max(1, spark.sparkContext.defaultParallelism // 2)
+    target = spark.sparkContext.defaultParallelism
+    threshold = max(2, target // 2)
     base = spark.range(1000).coalesce(1)
     guarded = ensure_min_parallelism(base)
     assert guarded.rdd.getNumPartitions() == target
     assert guarded.count() == 1000 and guarded.agg({"id": "sum"}).first()[0] == 499500
 
-    wide = spark.range(1000).repartition(max(target, 2))
+    # exchange-free frames are probed: at the threshold they pass
+    # through, one partition below it they are split
+    wide = spark.range(0, 1000, 1, numPartitions=threshold)
     passthrough = ensure_min_parallelism(wide)
     assert passthrough is wide  # no plan change at all
+    narrow = spark.range(0, 1000, 1, numPartitions=threshold - 1)
+    assert ensure_min_parallelism(narrow).rdd.getNumPartitions() == target
+
+    # a frame with an exchange is AQE's to size, whatever its count
+    shuffled = spark.range(1000).repartition(1)
+    assert ensure_min_parallelism(shuffled) is shuffled
 
 
 def test_random_projection_single_file_input_parallelizes(spark):

@@ -37,6 +37,30 @@ def test_quality_score_bounds_and_order(spark):
     assert out[1] > out[2] >= out[3]
 
 
+def test_quality_rounds_half_way_values_like_the_oracle(spark):
+    """A raw quality that is a half-way value at 6 decimals: 32 tokens,
+    30 distinct, one stopword -> 0.4*0.5 + 0.3*0.9375 + 0.3*0.078125 =
+    0.5046875 exactly. Spark's round(x, 6) rounds the decimal rendering
+    up to 0.504688; DuckDB scales first (x * 1e6 is 504687.49999999994)
+    and gets 0.504687. The engine must match the oracle, per document
+    and in source_stats' mean."""
+    import duckdb
+
+    from mapreduce_assignments_spark.operators.text_quality import source_stats
+
+    words = [f"w{i}" for i in range(29)]
+    text = " ".join(["the", *words, "w0", "w1"])
+    docs = spark.createDataFrame(
+        [(1, text, "en", "s")], "doc_id long, text string, lang string, source string"
+    )
+    raw = 0.4 * 0.5 + 0.3 * 0.9375 + 0.3 * 0.078125
+    assert raw == 0.5046875
+    oracle = duckdb.execute("SELECT round(CAST(? AS DOUBLE), 6)", [raw])
+    assert oracle.fetchone()[0] == 0.504687
+    assert quality_score(docs).first()["quality"] == 0.504687
+    assert source_stats(docs).first()["avg_quality"] == 0.504687
+
+
 def test_language_id(spark):
     rows = [
         (1, "the cat and the dog is here"),
